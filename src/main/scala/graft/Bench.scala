@@ -99,12 +99,20 @@ object Bench {
     // consecutive per-query repeats did exactly that (observed: an
     // untouched 0.8 s query measured 5.3 s on both back-to-back runs).
     // Queries whose two samples still disagree by >1.5x get a third.
+    // A query that throws is a failure, not a fast timing: it goes on
+    // the explicit `failed` list (stdout line and artifact), is not run
+    // again, and stays out of every per-query map and the total.
+    val failed = scala.collection.mutable.TreeSet.empty[String]
+    def ok(name: String): Boolean = !failed.contains(name)
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       spark.sparkContext.setJobGroup(name, name)
       runCount.computeIfAbsent(name, _ => new AtomicLong).incrementAndGet()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+      }
       finally spark.sparkContext.clearJobGroup()
       (System.nanoTime() - t0) / 1e9
     }
@@ -115,15 +123,15 @@ object Bench {
     val named = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1))).sortBy(_._1)
     val pass1 = named.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
-    val pass2 = named.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
-    val samples = named.map { case (name, fn) =>
+    val pass2 = named.filter(kv => ok(kv._1)).map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
+    val samples = named.filter(kv => ok(kv._1)).map { case (name, fn) =>
       val two = List(pass1(name), pass2(name))
       val best = two.min
       name -> (if (two.max > best * 1.5 && two.max - best > 0.3)
         timeOnce(name, fn) :: two
       else two)
     }
-    val results = samples.map { case (n, ss) => n -> ss.min }
+    val timed = samples.map { case (n, ss) => n -> ss.min }
     // Self-defense against host noise (the round-12 artifact was
     // produced on a badly loaded box and nearly unusable): after the
     // interleaved sweeps finish, re-measure the N slowest rows ISOLATED
@@ -133,7 +141,7 @@ object Bench {
     // the box, not a regression.
     val isolatedN = 15
     val fnOf = named.toMap
-    val isolated = results.sortBy(-_._2).take(isolatedN).map { case (n, sweepMin) =>
+    val isolated = timed.filter(kv => ok(kv._1)).sortBy(-_._2).take(isolatedN).map { case (n, sweepMin) =>
       // min of TWO back-to-back isolated runs: the first re-run after a
       // foreign-plan sweep pays HotSpot re-JIT churn, not execution
       // (measured r14 on q255: +22.6 s JIT time / 9.8 s wall on the
@@ -142,19 +150,23 @@ object Bench {
       // number is the one a production executor sees.
       n -> math.min(sweepMin,
         math.min(timeOnce(n, fnOf(n)), timeOnce(n, fnOf(n))))
-    }
+    }.filter(kv => ok(kv._1))
+    // a third or isolated run can throw too: drop what failed anywhere
+    val results = timed.filter(kv => ok(kv._1))
     // Per-query dispersion (max/min across the interleaved samples):
     // the artifact itself shows which numbers are host noise — a query
     // whose spread is 3x did not get slower, its box did.
     // SPARK_GRAFT_ONLY="" (empty) runs ZERO queries — the cheap
     // box-speed probe: warmup + wordcount anchor only, ~2 min, used to
     // decide whether a 30-min full sweep would land on a quiet box.
-    val spreads = samples.map { case (n, ss) => n -> ss.max / math.max(ss.min, 1e-9) }
+    val spreads = samples.filter(kv => ok(kv._1))
+      .map { case (n, ss) => n -> ss.max / math.max(ss.min, 1e-9) }
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val sp = spreads.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val maxSpread = spreads.map(_._2).maxOption.getOrElse(1.0)
 
     // Reference-parity word count as a machine-readable named metric:
@@ -283,7 +295,7 @@ object Bench {
     // full map still lands in the bench_last*.json artifacts.
     val lineBudget = 1800
     def mkLine(qs: String, omitted: Int): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"wordcount_words_per_s":$wordsPerS%.0f,"host_factor":$hostFactorJson,"host_anchor_words_per_s":$priorAnchorJson,"quiet_anchor_words_per_s":$QuietAnchorWordsPerS,"host_factor_vs_quiet":$vsQuiet%.3f,"isolated_s":$isoShortJson,"queries":$qs,"queries_omitted":$omitted,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failedJson,"wordcount_words_per_s":$wordsPerS%.0f,"host_factor":$hostFactorJson,"host_anchor_words_per_s":$priorAnchorJson,"quiet_anchor_words_per_s":$QuietAnchorWordsPerS,"host_factor_vs_quiet":$vsQuiet%.3f,"isolated_s":$isoShortJson,"queries":$qs,"queries_omitted":$omitted,"sf":"$sfDir"}"""
     val byTimeDesc = results.sortBy(-_._2)
     val headerLen = mkLine("{}", results.size).length
     val picked = {
@@ -298,7 +310,7 @@ object Bench {
     val line = mkLine(qsStdout, results.size - picked.size)
     require(line.length <= lineBudget + 64,
       s"bench stdout line overflowed the tail-capture budget: ${line.length}")
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"wordcount_words_per_s":$wordsPerS%.0f,"host_factor":$hostFactorJson,"host_anchor_words_per_s":$priorAnchorJson,"quiet_anchor_words_per_s":$QuietAnchorWordsPerS,"host_factor_vs_quiet":$vsQuiet%.3f,"isolated_s":$isoJson,"queries":$qsFull,"spreads":$sp,"shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"cpu_s":$cpuS,"sf":"$sfDir"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failedJson,"wordcount_words_per_s":$wordsPerS%.0f,"host_factor":$hostFactorJson,"host_anchor_words_per_s":$priorAnchorJson,"quiet_anchor_words_per_s":$QuietAnchorWordsPerS,"host_factor_vs_quiet":$vsQuiet%.3f,"isolated_s":$isoJson,"queries":$qsFull,"spreads":$sp,"shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"cpu_s":$cpuS,"sf":"$sfDir"}"""
     // Subset sweeps (SPARK_GRAFT_ONLY) must not clobber the committed
     // full-registry artifact — they write a sibling file instead. Full
     // sweeps ALSO write a per-core-count sibling (bench_last_c8.json /

@@ -40,5 +40,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer extension: window top-n written the plain DataFrame way
     // rewrites to the operator above automatically
     e.injectOptimizerRule(_ => graft.plans.RankFilterToTopK)
+    // fork-free local checkpoints: the builder runs once per session
+    // state, before its first query is analyzed, and binds NoForkFs as
+    // the file: FileContext that Spark's CheckpointFileManager writes
+    // offset/commit logs and state through; the rule itself checks nothing
+    e.injectCheckRule { session =>
+      graft.streaming.NoForkFs.bind(session)
+      _ => ()
+    }
   }
 }

@@ -642,11 +642,9 @@ object StatefulStreams {
     * "seen before" only matters within a freshness window.
     *
     * Requires the RocksDB state store provider (Spark rejects
-    * transformWithState on the HDFS-backed provider) and, in this
-    * container, a nofork:// checkpoint location ([[NoForkFileSystem]])
-    * — the per-micro-batch state schema/metadata file churn through
-    * stock RawLocalFileSystem forks `ls`/`chmod` per file, which is
-    * pathologically slow here.
+    * transformWithState on the HDFS-backed provider). A local
+    * checkpoint location needs no special scheme: a graft session
+    * writes its state schema and metadata files through [[NoForkFs]].
     *
     * Operational note: in ProcessingTime time mode the engine always
     * has another batch to run (processing time must advance for TTL

@@ -107,8 +107,7 @@ class SoakSpec extends SparkSpec {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sql = spark.sqlContext
-    val ckpt = NoForkFileSystem.install(
-      spark, Files.createTempDirectory("graft_soak_recover").toString)
+    val ckpt = Files.createTempDirectory("graft_soak_recover").toString
     val RestartAt = 25
     val fed = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_ms"))
@@ -223,8 +222,7 @@ class SoakSpec extends SparkSpec {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sql = spark.sqlContext
-    val ckpt = NoForkFileSystem.install(
-      spark, Files.createTempDirectory("graft_soak_ttl").toString)
+    val ckpt = Files.createTempDirectory("graft_soak_ttl").toString
     val TtlMs = 6L * 3600 * 1000 // 6 h; sf0.1 events span 30 days
     val all = graft.Tables.events(spark, sf)
       .select(col("user_id"), col("ts_ms"), col("event_type"))

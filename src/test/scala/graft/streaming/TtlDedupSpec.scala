@@ -13,10 +13,7 @@ import graft.SparkSpec
   * are dropped, and a key re-arriving after its state entry expired is
   * emitted again — the rolling-horizon semantics of continuous-ingest
   * dedup. Runs on the RocksDB provider (transformWithState rejects the
-  * HDFS-backed one) with a nofork:// checkpoint: stock local-FS
-  * checkpointing forks ls/chmod per state-schema/metadata file, which
-  * made the first micro-batch take minutes in this container
-  * (NoForkFileSystem scaladoc).
+  * HDFS-backed one) with a plain temp-directory checkpoint.
   *
   * Driving note: with TimeMode.ProcessingTime the engine ALWAYS has
   * another batch to run (processing time must advance for TTL/timer
@@ -45,8 +42,7 @@ class TtlDedupSpec extends SparkSpec {
               ConcurrentLinkedQueue[(Long, String)]) => Unit): Unit =
     withRocksDb {
       implicit val sql = spark.sqlContext
-      val ckpt = NoForkFileSystem.install(
-        spark, Files.createTempDirectory("graft_tws").toString)
+      val ckpt = Files.createTempDirectory("graft_tws").toString
       val in = MemoryStream[(Long, String)]
       val out = StatefulStreams.ttlDedup(in.toDS(), (r: (Long, String)) => r._1, ttl)
       val received = new ConcurrentLinkedQueue[(Long, String)]()
@@ -94,8 +90,7 @@ class TtlDedupSpec extends SparkSpec {
       drive: (MemoryStream[Row3], () => Unit, ConcurrentLinkedQueue[Row3], String) => Unit): Unit =
     withRocksDb {
       implicit val sql = spark.sqlContext
-      val ckpt = NoForkFileSystem.install(
-        spark, Files.createTempDirectory("graft_tws_et").toString)
+      val ckpt = Files.createTempDirectory("graft_tws_et").toString
       val in = MemoryStream[Row3]
       def start(received: ConcurrentLinkedQueue[Row3]) = {
         import org.apache.spark.sql.functions._
