@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.SortedSet
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main (driver contract): runs every registered
   * query against SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -26,23 +29,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: the default 100-entry codegen cache thrashes on a
-      // 267-query session (q255's 64-column classes re-Janino+re-JIT
-      // every run: 3.4 s warm vs 12 s evicted - see BASELINE.md r14)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.adaptive.enabled", "true")
-      // split the single-file testdata scans across cores (default 128m
-      // would put the whole 15 MB lineitem file in one task); at
-      // cluster scale the many-files layout does this naturally
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     // Warm up the session: JIT, codegen cache, FileSystem init, AQE
     // paths — run two representative queries untimed so the first
@@ -89,84 +76,29 @@ object Bench {
         }
       }
     })
-    val runCount = new ConcurrentHashMap[String, AtomicLong]()
 
-    // Min over INTERLEAVED passes, report the min: absorbs GC pauses,
-    // page-cache misses and other host interference observed to inflate
-    // single measurements 5-10x on this shared box. The passes run as
-    // full sweeps (all queries, then all again) so a multi-second
-    // interference window cannot land on both samples of one query —
-    // consecutive per-query repeats did exactly that (observed: an
-    // untouched 0.8 s query measured 5.3 s on both back-to-back runs).
-    // Queries whose two samples still disagree by >1.5x get a third.
-    // A query that throws is a failure, not a fast timing: it goes on
-    // the explicit `failed` list (stdout line and artifact), is not run
-    // again, and stays out of every per-query map and the total.
-    val failed = scala.collection.mutable.TreeSet.empty[String]
-    def ok(name: String): Boolean = !failed.contains(name)
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.sparkContext.setJobGroup(name, name)
-      runCount.computeIfAbsent(name, _ => new AtomicLong).incrementAndGet()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: $e")
-        failed += name
-      }
-      finally spark.sparkContext.clearJobGroup()
-      (System.nanoTime() - t0) / 1e9
-    }
     // Local-iteration subset (the driver never sets this): run only the
     // named queries — used for single-query plan work and the sf1
     // heavy-hitter sweeps where the full 250-query pass would dominate.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val named = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1))).sortBy(_._1)
-    val pass1 = named.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
-    val pass2 = named.filter(kv => ok(kv._1)).map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
-    val samples = named.filter(kv => ok(kv._1)).map { case (name, fn) =>
-      val two = List(pass1(name), pass2(name))
-      val best = two.min
-      name -> (if (two.max > best * 1.5 && two.max - best > 0.3)
-        timeOnce(name, fn) :: two
-      else two)
-    }
-    val timed = samples.map { case (n, ss) => n -> ss.min }
-    // Self-defense against host noise (the round-12 artifact was
-    // produced on a badly loaded box and nearly unusable): after the
-    // interleaved sweeps finish, re-measure the N slowest rows ISOLATED
-    // — one at a time, nothing else queued, sweep cache pressure gone —
-    // and record isolated_s = min(sweep min, isolated sample). A row
-    // whose isolated time is far under its sweep time was a victim of
-    // the box, not a regression.
-    val isolatedN = 15
-    val fnOf = named.toMap
-    val isolated = timed.filter(kv => ok(kv._1)).sortBy(-_._2).take(isolatedN).map { case (n, sweepMin) =>
-      // min of TWO back-to-back isolated runs: the first re-run after a
-      // foreign-plan sweep pays HotSpot re-JIT churn, not execution
-      // (measured r14 on q255: +22.6 s JIT time / 9.8 s wall on the
-      // first isolated run vs +3.2 s JIT / 3.6 s wall immediately
-      // after, with ZERO Janino recompiles in both). The steady-state
-      // number is the one a production executor sees.
-      n -> math.min(sweepMin,
-        math.min(timeOnce(n, fnOf(n)), timeOnce(n, fnOf(n))))
-    }.filter(kv => ok(kv._1))
-    // a third or isolated run can throw too: drop what failed anywhere
-    val results = timed.filter(kv => ok(kv._1))
+    val timings = timeQueries(spark, sfDir, named)
+    val results = timings.best
+    val isolated = timings.isolated
     // Per-query dispersion (max/min across the interleaved samples):
     // the artifact itself shows which numbers are host noise — a query
     // whose spread is 3x did not get slower, its box did.
     // SPARK_GRAFT_ONLY="" (empty) runs ZERO queries — the cheap
     // box-speed probe: warmup + wordcount anchor only, ~2 min, used to
     // decide whether a 30-min full sweep would land on a quiet box.
-    val spreads = samples.filter(kv => ok(kv._1))
-      .map { case (n, ss) => n -> ss.max / math.max(ss.min, 1e-9) }
+    val spreads = timings.samples.map { case (n, ss) => n -> ss.max / math.max(ss.min, 1e-9) }
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val sp = spreads.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = timings.total
+    val failedJson = timings.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val maxSpread = spreads.map(_._2).maxOption.getOrElse(1.0)
 
     // Reference-parity word count as a machine-readable named metric:
@@ -252,17 +184,17 @@ object Bench {
       waited += 1
     }
     val shuffleMb = results.map(_._1).sorted.map { k =>
-      val runs = math.max(Option(runCount.get(k)).map(_.get).getOrElse(1L), 1L)
+      val runs = timings.runs(k)
       val mb = Option(shuffleBytes.get(k)).map(_.get).getOrElse(0L) / runs / 1048576.0
       "\"" + k + "\":" + f"$mb%.1f"
     }.mkString("{", ",", "}")
     val spillMb = results.map(_._1).sorted.flatMap { k =>
-      val runs = math.max(Option(runCount.get(k)).map(_.get).getOrElse(1L), 1L)
+      val runs = timings.runs(k)
       val mb = Option(spillBytes.get(k)).map(_.get).getOrElse(0L) / runs / 1048576.0
       if (mb >= 0.05) Some("\"" + k + "\":" + f"$mb%.1f") else None
     }.mkString("{", ",", "}")
     val cpuS = results.map(_._1).sorted.map { k =>
-      val runs = math.max(Option(runCount.get(k)).map(_.get).getOrElse(1L), 1L)
+      val runs = timings.runs(k)
       val s = Option(cpuNs.get(k)).map(_.get).getOrElse(0L) / runs / 1e9
       "\"" + k + "\":" + f"$s%.2f"
     }.mkString("{", ",", "}")
@@ -328,5 +260,114 @@ object Bench {
     }
     println(line)
     spark.stop()
+  }
+
+  /** The session every graft tool measures or checks queries in:
+    * `local[cpus]`, as many shuffle partitions as cores, AQE on, the
+    * graft extensions, UTC. `Verify` builds its session here too, so
+    * the plan the oracle checks is the plan the bench times.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // static conf: the default 100-entry codegen cache thrashes on a
+      // 267-query session (q255's 64-column classes re-Janino+re-JIT
+      // every run: 3.4 s warm vs 12 s evicted - see BASELINE.md r14)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.adaptive.enabled", "true")
+      // split the single-file testdata scans across cores (default 128m
+      // would put the whole 15 MB lineitem file in one task); at
+      // cluster scale the many-files layout does this naturally
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** What [[timeQueries]] measured, for the queries that never threw.
+    * `samples` holds each query's interleaved sweep samples, `isolated`
+    * the re-measured slowest rows, `failed` every query that threw on
+    * any run and `runs` how often each query ran (failed ones included).
+    */
+  final case class Timings(
+      samples: Seq[(String, List[Double])],
+      isolated: Seq[(String, Double)],
+      failed: SortedSet[String],
+      runs: Map[String, Int]) {
+    /** The per-query map: best seconds per query; `n` is its size. */
+    val best: Seq[(String, Double)] = samples.map { case (n, ss) => n -> ss.min }
+    def total: Double = best.map(_._2).sum
+  }
+
+  /** Times `queries` through the `noop` sink, each run under its own job
+    * group (the query's name) so listeners can attribute its stages.
+    *
+    * Min over INTERLEAVED passes: absorbs GC pauses, page-cache misses
+    * and other host interference observed to inflate single
+    * measurements 5-10x on this shared box. The passes run as full
+    * sweeps (all queries, then all again) so a multi-second
+    * interference window cannot land on both samples of one query —
+    * consecutive per-query repeats did exactly that (observed: an
+    * untouched 0.8 s query measured 5.3 s on both back-to-back runs).
+    * Queries whose two samples still disagree by >1.5x get a third.
+    *
+    * Then, self-defense against host noise (the round-12 artifact was
+    * produced on a badly loaded box and nearly unusable): the
+    * `isolatedN` slowest rows are re-measured ISOLATED — one at a time,
+    * nothing else queued, sweep cache pressure gone — as the min of
+    * the sweep min and TWO back-to-back isolated runs: the first re-run
+    * after a foreign-plan sweep pays HotSpot re-JIT churn, not
+    * execution (measured r14 on q255: +22.6 s JIT time / 9.8 s wall on
+    * the first isolated run vs +3.2 s JIT / 3.6 s wall immediately
+    * after, with ZERO Janino recompiles in both). The steady-state
+    * number is the one a production executor sees. A row whose
+    * isolated time is far under its sweep time was a victim of the
+    * box, not a regression.
+    *
+    * A query that throws is a failure, not a fast timing: it goes on
+    * `failed`, is not run again, and stays out of `samples`,
+    * `isolated`, `best` and `total` — also when only a third or an
+    * isolated run throws.
+    */
+  def timeQueries(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      isolatedN: Int = 15): Timings = {
+    val failed = mutable.TreeSet.empty[String]
+    val runs = mutable.Map.empty[String, Int].withDefaultValue(0)
+    def ok(name: String): Boolean = !failed.contains(name)
+    def timeOnce(name: String, fn: Query): Double = {
+      spark.sparkContext.setJobGroup(name, name)
+      runs(name) += 1
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+      }
+      finally spark.sparkContext.clearJobGroup()
+      (System.nanoTime() - t0) / 1e9
+    }
+    val pass1 = queries.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
+    val pass2 = queries.filter(kv => ok(kv._1)).map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
+    val samples = queries.filter(kv => ok(kv._1)).map { case (name, fn) =>
+      val two = List(pass1(name), pass2(name))
+      val best = two.min
+      name -> (if (two.max > best * 1.5 && two.max - best > 0.3)
+        timeOnce(name, fn) :: two
+      else two)
+    }
+    val fnOf = queries.toMap
+    val isolated = samples.filter(kv => ok(kv._1)).map { case (n, ss) => n -> ss.min }
+      .sortBy(-_._2).take(isolatedN).map { case (n, sweepMin) =>
+        n -> math.min(sweepMin, math.min(timeOnce(n, fnOf(n)), timeOnce(n, fnOf(n))))
+      }
+    // a third or isolated run can throw too: drop what failed anywhere
+    Timings(samples.filter(kv => ok(kv._1)), isolated.filter(kv => ok(kv._1)),
+      SortedSet.from(failed), runs.toMap)
   }
 }

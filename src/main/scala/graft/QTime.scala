@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: time individual registered queries in isolation (same
-  * session shape as Bench — noop sink, AQE on, 32-way shuffle) without
+/** Dev tool: time individual registered queries in isolation (in
+  * `Bench.session` — noop sink, AQE on, 32-way shuffle) without
   * paying a full 78-query sweep. Usage:
   *   runMain graft.QTime <sfDir> <q1,q2,...> [reps]
   */
@@ -14,20 +12,7 @@ object QTime {
       .getOrElse(Seq("q01_pricing_summary"))
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: the default 100-entry codegen cache thrashes on a
-      // 267-query session (q255's 64-column classes re-Janino+re-JIT
-      // every run: 3.4 s warm vs 12 s evicted - see BASELINE.md r14)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     spark.read.parquet(s"$sfDir/nation.parquet").count()
     def compiles: Long = {
       import scala.jdk.CollectionConverters._

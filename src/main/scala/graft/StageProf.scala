@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 
 /** Dev tool (optimization round): per-stage metrics for one registered
@@ -15,17 +14,7 @@ object StageProf {
     val name = args.lift(1).getOrElse("q01_pricing_summary")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
 
     case class St(cpuS: Double, runS: Double, gcS: Double, shrMb: Double,
       shwMb: Double, inRec: Long, outRec: Long, site: String, nTasks: Int)

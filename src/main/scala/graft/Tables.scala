@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetSchema
 import org.apache.spark.sql.types.TimestampType
 
 /** Parquet table readers over the driver testdata directory layout
@@ -12,10 +13,28 @@ import org.apache.spark.sql.types.TimestampType
   * (`ReadSchema`) apply to every downstream query with zero extra work.
   * At cluster scale these would be partitioned-directory datasets; the
   * API surface is identical.
+  *
+  * Building a table starts no Spark job. Stock schema inference reads
+  * one parquet footer inside a one-task job (about 20 ms per read at
+  * small scale, paid by every registry query per input); here the
+  * schema is read on the driver by `ParquetSchema.infer` and handed to
+  * `spark.read.schema(...)`. That reads the same footer, picked by the
+  * same rule (`_common_metadata`, else `_metadata`, else the first data
+  * file by path), through the same footer-to-schema conversion under
+  * the same session flags, so the relation is the one stock inference
+  * builds — `Tables.events`' `nanosAsLong` setting included. Where one
+  * footer is not the whole answer (schema merging on, a partitioned
+  * directory) or the read fails, `infer` gives up and the read is plain
+  * `spark.read.parquet(path)`, errors included.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    ParquetSchema.infer(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

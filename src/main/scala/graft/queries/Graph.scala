@@ -937,7 +937,8 @@ object Graph {
     * so the v = src equi-join reuses both sides' partitioning: zero
     * exchanges on the join, exactly ONE (partial-agg-reduced) shuffle
     * per round. Split out (with [[hbInit]]/[[hbMerge]]/[[hbSummary]])
-    * so `graft.HbProfile` can time each phase in isolation.
+    * so each phase can be timed on its own (the round-14 per-phase
+    * profile is recorded in BASELINE.md).
     */
   private[graft] def hbEdges(s: SparkSession, d: String): DataFrame = {
     val e0 = lineitem(s, d)
