@@ -265,7 +265,8 @@ object Bench {
   /** The session every graft tool measures or checks queries in:
     * `local[cpus]`, as many shuffle partitions as cores, AQE on, the
     * graft extensions, UTC. `Verify` builds its session here too, so
-    * the plan the oracle checks is the plan the bench times.
+    * the oracle checks the plans the bench times when both run with the
+    * same `SPARK_GRAFT_CPUS` (their defaults differ: 4 and 32).
     */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -289,6 +290,10 @@ object Bench {
   }
 
   type Query = (SparkSession, String) => DataFrame
+
+  /** How many of the slowest rows [[timeQueries]] re-measures isolated;
+    * the stdout line's `isolated_s` map is budgeted for this many. */
+  private val isolatedN = 15
 
   /** What [[timeQueries]] measured, for the queries that never threw.
     * `samples` holds each query's interleaved sweep samples, `isolated`
@@ -335,8 +340,8 @@ object Bench {
     * `isolated`, `best` and `total` — also when only a third or an
     * isolated run throws.
     */
-  def timeQueries(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
-      isolatedN: Int = 15): Timings = {
+  def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): Timings = {
     val failed = mutable.TreeSet.empty[String]
     val runs = mutable.Map.empty[String, Int].withDefaultValue(0)
     def ok(name: String): Boolean = !failed.contains(name)

@@ -25,7 +25,10 @@ import org.apache.spark.sql.types.TimestampType
   * builds — `Tables.events`' `nanosAsLong` setting included. Where one
   * footer is not the whole answer (schema merging on, a partitioned
   * directory) or the read fails, `infer` gives up and the read is plain
-  * `spark.read.parquet(path)`, errors included.
+  * `spark.read.parquet(path)`, errors included. The gain is for flat
+  * inputs (files only under the path, as in the testdata); a
+  * partitioned directory pays one extra listing of its root before the
+  * fallback, unmeasured on an object store.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

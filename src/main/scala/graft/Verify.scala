@@ -10,7 +10,8 @@ object Verify {
     val keep: String => Boolean =
       args.lift(2).map(a => a.split(',').toSet: String => Boolean).getOrElse(_ => true)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Bench's session, so the oracle checks the plans the bench times
+    // Bench's session: the oracle checks the plans the bench times when
+    // both run with the same SPARK_GRAFT_CPUS (Bench defaults to 32)
     val spark = Bench.session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

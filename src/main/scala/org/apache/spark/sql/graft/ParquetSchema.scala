@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
@@ -58,12 +58,12 @@ object ParquetSchema {
         .sortBy(_.getPath.toString)
       if (leaves.exists(_.isDirectory) ||
           FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) return None
-      def named(n: String): Option[FileStatus] = leaves.find(_.getPath.getName == n)
-      val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
-        ParquetFileWriter.PARQUET_METADATA_FILE)
-      named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
-        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
-        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+      // `ParquetUtils.splitFiles` (private in Spark) and `inferSchema`'s
+      // pick; in path order `_common_metadata` sorts before `_metadata`
+      val (summaries, data) = leaves.partition(f =>
+        f.getPath.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE ||
+          f.getPath.getName == ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.headOption.orElse(data.headOption)
         .map { f =>
           val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
             HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS))
